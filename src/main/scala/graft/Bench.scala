@@ -1,10 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.LongAdder
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graftshim.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Driver-run benchmark. Emits ONE JSON line:
   *
@@ -45,6 +50,12 @@ import org.apache.spark.sql.SparkSession
   *    the best iteration: a query whose wall ≫ task run time stalled
   *    outside Spark (scheduler/JVM/host); run ≫ cpu means the executor
   *    threads were starved or blocked, gc isolates collector pauses;
+  *  - each detail record carries the best iteration's top 3 stages by
+  *    executor run time (`stages`), and a row that drives a stream
+  *    carries the engine's per-batch `durationMs` sums (`stream`), so a
+  *    query's wall is attributable from the bench's own output:
+  *    `SPARK_GRAFT_ONLY=q_x SPARK_GRAFT_ITERS=2 sbt "runMain graft.Bench"`
+  *    is the profiling recipe;
   *  - failures are LOUD: a throwing query records its actual elapsed
   *    wall (never a fake fast time) plus the exception in `errors`, and
   *    the process exits 0 only because a partial bench is still useful
@@ -52,7 +63,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Accumulates executor-side task metrics between snapshots. */
+  /** One completed stage. `site` is the first graft frame of the
+    * stage's call site outside this harness (the operator that launched
+    * a construction-time job), else Spark's short name — `save at
+    * Bench.scala:N` for the timed write's own stages.
+    */
+  final case class StageRow(id: Int, site: String, tasks: Int,
+                            runMs: Long, cpuMs: Long)
+
+  /** A query's streaming drains: per-key sums of each micro-batch's
+    * `durationMs` (triggerExecution = whole batch; addBatch = the data
+    * job; getBatch, latestOffset, queryPlanning, walCommit and
+    * commitOffsets are per-batch machinery no plan change can remove —
+    * BASELINE §20) and the batch count.
+    */
+  final case class StreamRow(batches: Int, durationMs: Map[String, Long])
+
+  /** Accumulates executor-side task metrics between snapshots, plus the
+    * completed stages and stream batches between [[takeProfile]] calls.
+    */
   final class MetricsListener extends SparkListener {
     val runMs = new LongAdder; val cpuNs = new LongAdder
     val gcMs = new LongAdder; val tasks = new LongAdder
@@ -96,6 +125,44 @@ object Bench {
         if (t.taskInfo.failed) failed.increment()
       }
     }
+    private val stageRows = new ConcurrentLinkedQueue[StageRow]
+    private val batches =
+      new ConcurrentLinkedQueue[java.util.Map[String, java.lang.Long]]
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      if (m != null) stageRows.add(StageRow(si.stageId,
+        si.details.linesIterator.map(_.trim)
+          .find(l => l.startsWith("graft.") && !l.startsWith("graft.Bench"))
+          .getOrElse(si.name).take(160),
+        si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L))
+    }
+    /** The streaming half; [[attach]] registers it with the session. */
+    val streams: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        batches.add(e.progress.durationMs)
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    def attach(spark: SparkSession): this.type = {
+      spark.sparkContext.addSparkListener(this)
+      spark.streams.addListener(streams)
+      this
+    }
+    /** Top 3 stages by run time and the stream sums (None when no
+      * batch ran) since the previous call, which they are cleared by.
+      */
+    def takeProfile(): (Seq[StageRow], Option[StreamRow]) = {
+      def drain[T](q: ConcurrentLinkedQueue[T]): Seq[T] =
+        Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
+      val bs = drain(batches)
+      val stream = if (bs.isEmpty) None else Some(StreamRow(bs.size,
+        bs.flatMap(_.asScala).groupMapReduce(_._1)(_._2.longValue)(_ + _)))
+      (drain(stageRows).sortBy(-_.runMs).take(3), stream)
+    }
     def snap: Array[Long] =
       Array(runMs.sum, cpuNs.sum / 1000000L, gcMs.sum, tasks.sum,
         spillMemB.sum >> 20, spillDiskB.sum >> 20,
@@ -117,7 +184,9 @@ object Bench {
                                metrics: Array[Long], err: Option[String],
                                codegenN: Seq[Long] = Nil,
                                jitMs: Seq[Long] = Nil,
-                               okFlags: Seq[Boolean] = Nil) {
+                               okFlags: Seq[Boolean] = Nil,
+                               stages: Seq[StageRow] = Nil,
+                               stream: Option[StreamRow] = None) {
     /** No iteration succeeded — the query is genuinely broken, as
       * opposed to a transient flake (err set, but a later iteration
       * succeeded and supplied the wall/metrics).
@@ -139,12 +208,6 @@ object Bench {
       case scala.util.control.NonFatal(_) => ()
     }
 
-  /** Run one query `iters` times; min wall + metrics over the
-    * SUCCESSFUL iterations (a transient failure must not contribute a
-    * fake-fast wall). If every iteration fails, the reported wall is
-    * the MAXIMUM elapsed — a broken query must never look fast — and
-    * the exception is carried in `err`.
-    */
   /** Compile-pressure snapshot: (codegen compilations so far, JVM JIT
     * total compile ms so far). Count from the codahale histogram is
     * exact; the JIT bean can be absent on exotic JVMs → -1 sentinel.
@@ -158,9 +221,18 @@ object Bench {
     (cg, jit)
   }
 
+  /** Run one query `iters` times; min wall + metrics over the
+    * SUCCESSFUL iterations (a transient failure must not contribute a
+    * fake-fast wall). If every iteration fails, the reported wall is
+    * the MAXIMUM elapsed — a broken query must never look fast — and
+    * the exception is carried in `err`.
+    */
   def runQuery(spark: SparkSession, listener: MetricsListener, iters: Int)
               (run: () => Unit): QueryResult = {
     var err: Option[String] = None
+    final case class Iter(wall: Double, metrics: Array[Long], ok: Boolean,
+                          cg: Long, jit: Long,
+                          profile: (Seq[StageRow], Option[StreamRow]))
     val runs = (1 to iters).map { _ =>
       // Harness hygiene, not caching: drop the previous run's leaked
       // localCheckpoint round state (pinned session caches excepted)
@@ -172,7 +244,10 @@ object Bench {
       graft.graph.IterState.releaseAllExceptPinned(spark)
       drainListenerBus(spark)
       val before = listener.snap
+      listener.takeProfile() // drop what earlier work left behind
       val (cg0, jit0) = compileSnap()
+      def jitDelta(jit1: Long) =
+        if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0
       val t0 = System.nanoTime()
       try {
         run()
@@ -180,8 +255,8 @@ object Bench {
         drainListenerBus(spark)
         val after = listener.snap
         val (cg1, jit1) = compileSnap()
-        (wall, after.zip(before).map { case (a, b) => a - b }, true,
-          cg1 - cg0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
+        Iter(wall, after.zip(before).map { case (a, b) => a - b }, true,
+          cg1 - cg0, jitDelta(jit1), listener.takeProfile())
       } catch {
         // NonFatal only: an OOM/StackOverflow corrupts the JVM — every
         // later query's wall would be garbage published as a valid
@@ -191,15 +266,15 @@ object Bench {
           err = Some(s"${e.getClass.getSimpleName}: " +
             String.valueOf(e.getMessage).take(300))
           val (cg1, jit1) = compileSnap()
-          ((System.nanoTime() - t0) / 1e9, Array(0L, 0L, 0L, 0L), false,
-            cg1 - cg0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
+          Iter((System.nanoTime() - t0) / 1e9, Array(0L, 0L, 0L, 0L), false,
+            cg1 - cg0, jitDelta(jit1), (Nil, None))
       }
     }
-    val walls = runs.map(_._1)
-    val ok = runs.filter(_._3)
-    val best = if (ok.nonEmpty) ok.minBy(_._1) else runs.maxBy(_._1)
-    QueryResult(best._1, walls, best._2, err,
-      runs.map(_._4), runs.map(_._5), runs.map(_._3))
+    val ok = runs.filter(_.ok)
+    val best = if (ok.nonEmpty) ok.minBy(_.wall) else runs.maxBy(_.wall)
+    QueryResult(best.wall, runs.map(_.wall), best.metrics, err,
+      runs.map(_.cg), runs.map(_.jit), runs.map(_.ok),
+      best.profile._1, best.profile._2)
   }
 
   private def jsonNum(d: Double): String =
@@ -311,12 +386,21 @@ object Bench {
         s""""retried":${r.metrics(8)},"failed":${r.metrics(9)},""" +
         s""""stage_retries":${r.metrics(10)}"""
       else ""
+      val stages = r.stages.map(st =>
+        s"""{"id":${st.id},"site":${jsonStr(st.site)},"tasks":${st.tasks},""" +
+          s""""run_ms":${st.runMs},"cpu_ms":${st.cpuMs}}""")
+        .mkString("[", ",", "]")
+      val stream = r.stream.map { sr =>
+        val ms = sr.durationMs.toSeq.sorted
+          .map { case (key, v) => s"${jsonStr(key)}:$v" }.mkString("{", ",", "}")
+        s""","stream":{"batches":${sr.batches},"duration_ms":$ms}"""
+      }.getOrElse("")
       s"${jsonStr(k)}:{" +
         s""""best":${jsonNum(r.best)},"wall":$walls,"ok":$ok,""" +
         s""""run_ms":${r.metrics(0)},""" +
         s""""cpu_ms":${r.metrics(1)},"gc_ms":${r.metrics(2)},""" +
         s""""tasks":${r.metrics(3)}$evidence,""" +
-        s""""codegen_n":$cg,"jit_ms":$jit$errPart}"""
+        s""""codegen_n":$cg,"jit_ms":$jit,"stages":$stages$stream$errPart}"""
     }.mkString("{", ",", "}")
     val errPart =
       if (errs.isEmpty) "" else s""","errors":${errs.mkString("{", ",", "}")}"""
@@ -365,120 +449,17 @@ object Bench {
     (line, detailJson)
   }
 
-  /** Re-lay every sfDir table as `nFiles`-file parquet under /tmp and
-    * return the copy's path (BASELINE.md §9–10, VERDICT r6 item 6):
-    * the driver's testdata is ONE row group per table, so any
-    * CPU-dense narrow query serializes on a single task and ~8 s of
-    * apparent bench time is input-layout artifact, not plan cost.
-    * `SPARK_GRAFT_SPLIT_COPY=1` runs the same bench against the
-    * split layout so both points are comparable round-over-round.
-    * The copy is content-addressed by source dir and cached behind a
-    * _SUCCESS marker — rebuilding costs ~20 s, reuse is free.
-    */
-  private def splitCopy(spark: SparkSession, sfDir: String,
-                        nFiles: Int): String = {
-    val listed = Option(new java.io.File(sfDir).listFiles())
-      .getOrElse(sys.error(s"SPARK_GRAFT_SF_DIR does not exist: $sfDir"))
-    val tables = listed.filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    require(tables.nonEmpty, s"no *.parquet tables under $sfDir")
-    // content-keyed, not path-keyed: the driver regenerates testdata
-    // at the SAME path every round, so a path-only cache would serve
-    // the previous round's rows forever (same tag discipline as the
-    // bucketed-layout cache in CoreQueries.bucketedJoin)
-    val listing = tables
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(sfDir, "|", s"|$nFiles")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
-    val dst = s"/tmp/graft_split_$tag"
-    val done = java.nio.file.Paths.get(dst, "_SUCCESS")
-    if (!java.nio.file.Files.exists(done)) {
-      tables.map(_.getName).foreach { t =>
-        spark.read.parquet(s"$sfDir/$t").repartition(nFiles)
-          .write.mode("overwrite").parquet(s"$dst/$t")
-      }
-      java.nio.file.Files.createFile(done)
-    }
-    dst
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDirRaw = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
-    val split = sys.env.get("SPARK_GRAFT_SPLIT_COPY").exists(_ == "1")
     // shuffle width defaults to the thread count (the harness contract)
     // but can be scaled independently for scale-factor legs: the §12
     // sf1 probe runs with partitions sized to the data, not the box,
     // exactly as a real deployment would
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
-    // State-store A/B knob (VERDICT r11 #5): `rocksdb` swaps every
-    // stateful streaming query onto the disk-backed RocksDB provider so
-    // the q_stream_* rows can be cost-attributed against the default
-    // HDFS-backed in-memory store at the ×100 leg. Unset = default.
-    val stateStore = sys.env.get("SPARK_GRAFT_STATESTORE") match {
-      case Some("rocksdb") => Some("org.apache.spark.sql.execution." +
-        "streaming.state.RocksDBStateStoreProvider")
-      case Some("") | None => None
-      // fail fast on a typo ('RocksDB', 'rocks') — silently falling
-      // through would report default-HDFS numbers labeled as RocksDB
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_STATESTORE: unrecognized value '$other' " +
-          "(expected 'rocksdb' or unset)")
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Whole-stage-codegen CLASS cache (static conf, default 100
-      // entries): the iterative graph queries compile ~130 codegen
-      // units per run — past 100 the LRU thrashes and EVERY iteration
-      // recompiles the lot (r13 forensics: q_ppr_terms codegen_n
-      // [128, 98, 106] across its three iterations, 6–20 s of JIT per
-      // pass on a 3.4 s-run_ms query). This caches compiled CLASSES,
-      // never data or results; sized to hold the suite's largest
-      // query several times over.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // SURVEY §4: coercion parity with the reference (errors='coerce')
-      .config("spark.sql.ansi.enabled", "false")
-      // Naive parquet timestamps surface as TIMESTAMP, not NTZ — two
-      // rounds of testdata `ts` re-encodings (BASELINE.md §7); the
-      // type-driven repair in Tables.normalizeTs is the second belt.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // The default 60 s state-store maintenance tick snapshots EVERY
-      // loaded provider — including orphans of already-completed
-      // AvailableNow drains — and its cost lands on whichever query
-      // happens to be running, a roaming +3–12 s run_ms tax that
-      // moved between q_stream_* rows every round (measured r10:
-      // streaming mini-suite run_ms 29.5 s → 15.3 s with the tick
-      // stretched). Drains live ≪ 60 s, so maintenance buys them
-      // nothing; one tick per hour still bounds orphaned-provider
-      // memory over the longest suite run. Harness-session scope
-      // only — the library never mutates a caller's session.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      // NOTE (r11, measured both ways — BASELINE §17.1): raising
-      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold from
-      // its 128-key default looked like a free 2.6× on the typed-
-      // aggregate apply stages at close scale (collect_set baskets:
-      // 6.7 s → 2.5 s), but at the ×100 leg the hash path's per-group
-      // OBJECT states thrash the collector (q_item_sim 64.9 → 104.8 s
-      // with 605 s of GC even in a 32 GiB heap; containment 23 → 32 s)
-      // where the sort fallback streams ONE state at a time. The
-      // default is kept: no key-count threshold separates the two
-      // regimes, and the structural fix (compute each typed aggregate
-      // ONCE — see AnalyticsQueries.baskets) captures most of the win
-      // at every scale.
-    val spark = stateStore.fold(builder0)(p =>
-        builder0.config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkLogs.quietIterativeCleanup()
-    val sfDir = if (split) splitCopy(spark, sfDirRaw, cpus.toInt) else sfDirRaw
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val parts = sys.env.get("SPARK_GRAFT_PARTITIONS").map(_.toInt).getOrElse(cpus)
+    val spark = GraftSession.local(cpus, parts)
+    val listener = new MetricsListener().attach(spark)
 
     // Warm the JVM/codegen/parquet-reader paths so the first timed query
     // doesn't absorb one-time startup cost (JIT, codegen compiler init).
@@ -486,7 +467,7 @@ object Bench {
     // corrupt warm-up file must degrade to a cold first query, never
     // abort the bench before a single timed query ran.
     try {
-      spark.read.parquet(s"$sfDir/nation.parquet")
+      spark.read.parquet(s"$sfDirRaw/nation.parquet")
         .groupBy("n_regionkey").count().count()
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warm-up skipped: $e") }
@@ -536,7 +517,7 @@ object Bench {
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
           name -> runQuery(spark, listener, iters)(() =>
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+            fn(spark, sfDirRaw).write.format("noop").mode("overwrite").save())
         }
 
     // Calibration leg (VERDICT r10 #6): when the main run is NOT at the
@@ -545,35 +526,24 @@ object Bench {
     // interpretable without a documented thread-band factor. Dev
     // subsets (SPARK_GRAFT_ONLY) skip it; SPARK_GRAFT_CALIB=0 opts out.
     val calib: Option[(Int, Seq[(String, QueryResult)])] =
-      if (cpus == "4" || only.nonEmpty ||
+      if (cpus == 4 || only.nonEmpty ||
           sys.env.get("SPARK_GRAFT_CALIB").contains("0")) None
       else {
         spark.stop()
-        val cs = SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.ansi.enabled", "false")
-          .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.streaming.stateStore.maintenanceInterval",
-            "3600s")
-          .getOrCreate()
-        cs.sparkContext.setLogLevel("WARN")
-        val cl = new MetricsListener
-        cs.sparkContext.addSparkListener(cl)
+        val cs = GraftSession.local(4, 4)
+        val cl = new MetricsListener().attach(cs)
         val cres = headline
           .flatMap(k => SparkEntry.queries.get(k).map(k -> _))
           .map { case (name, fn) =>
             name -> runQuery(cs, cl, iters = 2)(() =>
-              fn(cs, sfDir).write.format("noop").mode("overwrite").save())
+              fn(cs, sfDirRaw).write.format("noop").mode("overwrite").save())
           }
         cs.stop()
         Some((4, cres))
       }
 
-    val (line, detailJson) = renderOutputs(results, sfDir, iters,
-      cpus.toInt, calib)
+    val (line, detailJson) = renderOutputs(results, sfDirRaw, iters,
+      cpus, calib)
     // The stdout line is the primary contract — print it FIRST so a
     // detail-file write failure (non-writable cwd) can't discard the
     // whole bench after every query already ran.

@@ -27,7 +27,13 @@ import org.apache.logging.log4j.core.filter.RegexFilter
   * future deprecations) still reaches the driver logs.
   */
 object SparkLogs {
-  def quietIterativeCleanup(): Unit = {
+  /** Installs the filters once per JVM: every test suite builds its
+    * session through [[GraftSession.local]], and a filter per call
+    * would run each log event through one regex per suite.
+    */
+  def quietIterativeCleanup(): Unit = installed
+
+  private lazy val installed: Unit = {
     addDenyFilter(".*locally checkpointed.*")
     // WindowExec warns "No Partition Defined for Window operation!
     // ... Moving all data to a single partition" on EVERY unpartitioned

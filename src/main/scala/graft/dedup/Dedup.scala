@@ -106,34 +106,6 @@ object Dedup {
       .select(col(idCol), col("shingle"))
   }
 
-  /** n-gram Jaccard near-dup pairs via PREFIX-FILTERED candidate
-    * generation (SSJoin: Chaudhuri/Ganti/Kaushik, ICDE 2006; All-Pairs:
-    * Bayardo/Ma/Srikant, WWW 2007): under a global rarity order on
-    * shingles, any pair with Jaccard ≥ t must share at least one
-    * shingle among each document's first ⌊(1−t)·n⌋+1 shingles — so
-    * only those PREFIX shingles enter the inverted-index self-join,
-    * and candidates are verified exactly against the full (hashed)
-    * shingle sets. Returns `(doc_a, doc_b, jaccard)` for pairs ≥
-    * threshold; results are EXACT (same rows as the naive
-    * inverted-index join, which at sf0.1 produced 1.13M candidate
-    * pairs for the 256 survivors — the prefix index prunes that
-    * blowup at the source).
-    *
-    * At 100 TB:
-    *  - the candidate join is keyed by prefix shingle — RAREST-first
-    *    ordering makes the hot-key problem self-limiting (a shingle in
-    *    many docs is by definition late in the order and rarely
-    *    indexed), on top of the optional `maxDf` hard cap;
-    *  - a length filter (t·n_a ≤ n_b ≤ n_a/t, All-Pairs §3.1) prunes
-    *    candidates before the verify joins;
-    *  - shingles travel as xxhash64 LONGS after the explode — ~3×
-    *    narrower shuffles than the raw trigram strings, and Jaccard on
-    *    the hash sets equals Jaccard on the string sets barring 64-bit
-    *    collisions;
-    *  - verification is two id-keyed array joins + one narrow
-    *    `array_intersect` per candidate, never a per-shingle pair
-    *    explosion.
-    */
   /** Shared prefix-filter substrate for [[ngramJaccard]] and
     * [[containmentPairs]]: hashed (optionally df-capped) shingles plus
     * each doc's shingle-hash array in GLOBAL RARITY order — (document
@@ -205,6 +177,42 @@ object Dedup {
     if (materialize) arrs.localCheckpoint(true) else arrs
   }
 
+  /** n-gram Jaccard near-dup pairs via PREFIX-FILTERED candidate
+    * generation (SSJoin: Chaudhuri/Ganti/Kaushik, ICDE 2006; All-Pairs:
+    * Bayardo/Ma/Srikant, WWW 2007): under a global rarity order on
+    * shingles, any pair with Jaccard ≥ t must share at least one
+    * shingle among each document's first ⌊(1−t)·n⌋+1 shingles — so
+    * only those PREFIX shingles enter the inverted-index self-join,
+    * and candidates are verified exactly against the full (hashed)
+    * shingle sets. Returns `(doc_a, doc_b, jaccard)` for pairs ≥
+    * threshold; results are EXACT (same rows as the naive
+    * inverted-index join, which at sf0.1 produced 1.13M candidate
+    * pairs for the 256 survivors — the prefix index prunes that
+    * blowup at the source).
+    *
+    * At 100 TB:
+    *  - the candidate join is keyed by prefix shingle — RAREST-first
+    *    ordering makes the hot-key problem self-limiting (a shingle in
+    *    many docs is by definition late in the order and rarely
+    *    indexed), on top of the optional `maxDf` hard cap;
+    *  - a length filter (t·n_a ≤ n_b ≤ n_a/t, All-Pairs §3.1) prunes
+    *    candidates before the verify joins;
+    *  - shingles travel as xxhash64 LONGS after the explode — ~3×
+    *    narrower shuffles than the raw trigram strings, and Jaccard on
+    *    the hash sets equals Jaccard on the string sets barring 64-bit
+    *    collisions;
+    *  - verification is two id-keyed array joins + one narrow
+    *    `array_intersect` per candidate, never a per-shingle pair
+    *    explosion.
+    *
+    * Eager, and it holds storage: when the input's size estimate is at
+    * least `spark.graft.dedup.materializeIndexMinBytes` (default 4 MiB)
+    * this runs a `localCheckpoint` job while the DataFrame is BUILT,
+    * before any action, and the checkpoint's blocks stay in executor
+    * storage until the returned frame is garbage-collected (Spark's
+    * ContextCleaner) or [[graft.graph.IterState.releaseAllExceptPinned]]
+    * runs.
+    */
   def ngramJaccard(df: DataFrame, threshold: Double = 0.8, k: Int = 3,
                    textCol: String = "text", idCol: String = "doc_id",
                    maxDf: Option[Int] = None): DataFrame = {
@@ -251,6 +259,12 @@ object Dedup {
     * exactness on pairs whose ONLY shared shingles are capped ones.
     * Verification is the same two id-keyed array joins as
     * [[ngramJaccard]] — never a per-shingle pair blow-up.
+    *
+    * Eager and storage-holding exactly like [[ngramJaccard]]: above the
+    * same size gate it runs a `localCheckpoint` job at DataFrame
+    * construction, whose blocks stay until the frame is
+    * garbage-collected or [[graft.graph.IterState.releaseAllExceptPinned]]
+    * runs.
     */
   def containmentPairs(df: DataFrame, threshold: Double = 0.9, k: Int = 3,
                        textCol: String = "text", idCol: String = "doc_id",

@@ -1632,6 +1632,12 @@ object TrainingQueries {
     * join against model tables whose size is vocab-bounded, so the
     * plan is corpus-linear; "train" and "score" are the same frames a
     * production run would persist and reuse.
+    *
+    * Eager, and it holds storage: building the DataFrame runs a
+    * `localCheckpoint` job over the corpus bigrams (unconditionally),
+    * and the checkpoint's blocks stay in executor storage until the
+    * returned frame is garbage-collected (Spark's ContextCleaner) or
+    * [[graft.graph.IterState.releaseAllExceptPinned]] runs.
     */
   def lmScore(s: SparkSession, d: String): DataFrame = {
     // r13 (guide §2.4 remove shuffles outright): adjacent bigrams come
@@ -1837,8 +1843,8 @@ object TrainingQueries {
     * closure output is an eager localCheckpoint, its blocks pinned in
     * executor storage — and let every consumer scan those blocks
     * instead of running a second closure. The cache key
-    * carries a file content tag (name:length:mtime, the
-    * [[graft.Bench.splitCopy]] discipline) so a regenerated corpus at
+    * carries a file content tag (name:length:mtime of every input
+    * file, not the path alone) so a regenerated corpus at
     * the same path can never serve stale clusters; the superseded
     * relation is unpersisted on refresh. At 100 TB this relation is
     * what a pipeline lands to parquet between stages — the in-memory

@@ -5,11 +5,7 @@ package graft
   */
 class BenchSpec extends SparkSpec {
 
-  private def listener = {
-    val l = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
+  private def listener = new Bench.MetricsListener().attach(spark)
 
   test("a throwing query reports its true elapsed wall plus the error") {
     val r = Bench.runQuery(spark, listener, iters = 2) { () =>
@@ -58,6 +54,42 @@ class BenchSpec extends SparkSpec {
     assert(r.codegenN.length === 2 && r.jitMs.length === 2)
     assert(r.codegenN.forall(_ >= 0))
     assert(r.jitMs.forall(v => v >= 0 || v == -1L))
+    assert(r.stages.nonEmpty && r.stream.isEmpty, "no stream was driven")
+  }
+
+  test("detail records carry the best iteration's top stages and stream split") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val in = java.nio.file.Files.createTempDirectory("bench_stream").toString
+    spark.range(200).selectExpr("id % 7 AS k", "id AS v")
+      .write.mode("overwrite").parquet(in)
+    val r = Bench.runQuery(spark, listener, iters = 2) { () =>
+      spark.range(10000).selectExpr("id % 10 AS k").groupBy("k").count()
+        .write.format("noop").mode("overwrite").save()
+      graft.stream.Streams.runAvailableNow(
+        spark.readStream.schema("k LONG, v LONG").parquet(in),
+        "bench_spec_drain")
+    }
+    assert(r.err.isEmpty, r.err)
+    assert(r.stages.nonEmpty && r.stages.size <= 3, r.stages)
+    assert(r.stages.map(-_.runMs) === r.stages.map(-_.runMs).sorted)
+    assert(r.stages.forall(st => st.tasks > 0 && st.site.nonEmpty), r.stages)
+    val sr = r.stream.getOrElse(fail("the drain's batches were not recorded"))
+    assert(sr.batches >= 1)
+    assert(Seq("triggerExecution", "addBatch").forall(sr.durationMs.contains),
+      sr.durationMs)
+    val (line, detail) = Bench.renderOutputs(Seq("q_probe" -> r), "/tmp/sf", 2)
+    assert(line.length < 2000, s"line: ${line.length}")
+    val rec = parse(detail) \ "detail" \ "q_probe"
+    val JArray(stages) = rec \ "stages": @unchecked
+    assert(stages.size === r.stages.size)
+    stages.foreach { st =>
+      assert(Seq("id", "site", "tasks", "run_ms", "cpu_ms")
+        .forall(k => (st \ k) != JNothing), st)
+    }
+    assert((rec \ "stream" \ "batches") === JInt(sr.batches))
+    assert((rec \ "stream" \ "duration_ms" \ "addBatch") ===
+      JInt(sr.durationMs("addBatch")))
   }
 
   test("calibration leg renders into the line and detail, inside the window") {

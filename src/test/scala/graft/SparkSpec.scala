@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test base: one lazy SparkSession per JVM (suites share it —
-  * `getOrCreate` returns the same session), local[4], tiny shuffle
-  * fan-out, UTC.
+  * `getOrCreate` returns the same session), built by the harness
+  * factory at local[4] with a tiny shuffle fan-out.
   *
   * `SPARK_GRAFT_ANSI=true sbt test` runs the whole suite under ANSI
   * mode — the queries use try_cast at every coercion site, so results
@@ -13,15 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-round, not assumed).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled",
+  lazy val spark: SparkSession = {
+    val s = GraftSession.local(cpus = 4, partitions = 4)
+    s.conf.set("spark.sql.ansi.enabled",
       sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    s
+  }
 
   def sfDir: String = "/root/testdata/sf0.001"
 }

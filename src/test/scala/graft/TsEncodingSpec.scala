@@ -115,13 +115,17 @@ class TsEncodingSpec extends SparkSpec {
   }
 
   test("NTZ normalizes identically whether inference is on or off") {
-    // The driver entry points pin inferTimestampNTZ=false (ts arrives
-    // TIMESTAMP directly); the default-config path arrives NTZ and
-    // takes the cast branch. Same instants either way.
-    val onPath = instants("ntz") // suite session: inference default=on
+    // The harness sessions pin inferTimestampNTZ=false (ts arrives
+    // TIMESTAMP directly); a library caller's default-config session
+    // infers NTZ and takes the cast branch. Same instants either way.
     val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    spark.conf.set(key, "false")
-    try assert(instants("ntz") == onPath)
-    finally spark.conf.unset(key)
+    def under(v: String): Seq[Long] = {
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, v)
+      try instants("ntz") finally spark.conf.set(key, prev)
+    }
+    val onPath = under("true")
+    assert(onPath.nonEmpty)
+    assert(under("false") == onPath)
   }
 }

@@ -209,16 +209,34 @@ def selftest():
     with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
         json.dump({"detail": {"q_a": {"run_ms": 110, "cpu_ms": 100}}}, f)
         p2 = f.name
+    # records carrying the per-stage and streaming profile: the gate
+    # must read the query's own run_ms and cpu_ms, never a nested
+    # stage's or the stream's durationMs sums
+    profiled = {"detail": {
+        "q_a": {"run_ms": 900, "cpu_ms": 800,
+                "stages": [{"id": 7, "site": "save at Bench.scala:1",
+                            "tasks": 4, "run_ms": 600, "cpu_ms": 500}]},
+        "q_stream_x": {"run_ms": 300, "cpu_ms": 200, "stages": [],
+                       "stream": {"batches": 2, "duration_ms": {
+                           "addBatch": 250, "triggerExecution": 400}}}}}
+    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
+        json.dump(profiled, f)
+        p3 = f.name
     try:
         assert contention_of(load_detail(p1)) == 1.83
         assert abs(contention_of(load_detail(p2)) - 1.1) < 1e-9
         assert contention_of(load_detail(p1)) > CONTENTION_QUIET_MAX
         assert contention_of(load_detail(p2)) <= CONTENTION_QUIET_MAX
+        assert load_runms(p3) == {"q_a": 900, "q_stream_x": 300}, \
+            load_runms(p3)
+        assert abs(contention_of(load_detail(p3)) - 1.2) < 1e-9
     finally:
         os.unlink(p1)
         os.unlink(p2)
+        os.unlink(p3)
     print("selftest ok: planted regression caught, ledger honored, "
-          "vanished query caught, contention band classified")
+          "vanished query caught, contention band classified, "
+          "profiled records read")
     return 0
 
 
